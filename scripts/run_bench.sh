@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
 # Crawl throughput at three parallelism levels (2 repeats) + harness bench.
-# Tuned batch sizes keep per-task working sets L3-resident (see BENCH/BASELINE.md).
+# graft.GraftSpark pins the tuned batch sizes that keep per-task working sets
+# L3-resident (see BENCH/BASELINE.md).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 ARGS="${CRAWL_ARGS:-64 600000 8 9 600000 0}"
@@ -11,7 +12,6 @@ OUT=/tmp/graft-bench/results.jsonl
 for REP in 1 2; do
   for CPUS in 2 8 32; do
     echo "== CrawlBench rep$REP local[$CPUS] (args: $ARGS)"
-    GRAFT_CACHE_BATCH=1024 GRAFT_SCAN_BATCH=512 \
     SPARK_GRAFT_CPUS=$CPUS SPARK_DRIVER_MEM=48g \
       sbt -batch "runMain graft.CrawlBench $ARGS" 2>&1 \
       | grep -E '^\[info\] \{"bench"' | sed 's/^\[info\] //' | tee -a "$OUT"

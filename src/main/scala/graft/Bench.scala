@@ -61,20 +61,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("GRAFT_BENCH_REPS", "3").toInt
     val warmups = sys.env.getOrElse("GRAFT_BENCH_WARMUP", "1").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // small columnar batches keep per-task working sets inside the shared
-      // L3 at high core counts — measured 2x on this box (BENCH/BASELINE.md)
-      .config("spark.sql.inMemoryColumnarStorage.batchSize", sys.env.getOrElse("GRAFT_CACHE_BATCH", "1024"))
-      .config("spark.sql.parquet.columnarReaderBatchSize", sys.env.getOrElse("GRAFT_SCAN_BATCH", "512"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSpark.session("graft-bench")
     val names = SparkEntry.queries.keys.toSeq.sorted
     val queries = SparkEntry.queries
     // a failed query must fail LOUDLY (an "err" entry + nonzero exit), never

@@ -4,7 +4,6 @@ import graft.crawl.{CrawlLoop, SnapshotStore}
 import graft.fixtures.Fixtures
 import graft.fixtures.Fixtures.FixtureConfig
 import graft.model._
-import org.apache.spark.sql.SparkSession
 
 /** End-to-end driver for the crawl engine over a deterministic fixture web:
   * politeness budgets + robots + runners + checkpoint/resume, printing the
@@ -31,15 +30,7 @@ object CrawlDemo {
     val maxPages = args.lift(1).map(_.toInt).getOrElse(30)
     val budget = args.lift(2).map(_.toInt).getOrElse(4)
     val maxRounds = args.lift(3).map(_.toInt).getOrElse(64)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-crawl-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSpark.session("graft-crawl-demo")
     import spark.implicits._
 
     val useWarc = args.lift(4).contains("warc")

@@ -119,17 +119,6 @@ class CrawlLoop(
     store.commit(0, Map("frontier" -> n, "ord_next" -> 0L))
   }
 
-  private val timing = sys.env.contains("GRAFT_TIMING")
-  private def timed[T](round: Int, phase: String)(body: => T): T = {
-    if (!timing) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"[timing] r$round $phase ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-  }
-
   /** Seen set as of round k, as SNAPSHOT PARTS for chained anti-joins: the
     * latest compacted base (a bucketed table — its anti-join needs no
     * Exchange on this, the big, side) plus the uncompacted per-round deltas
@@ -211,25 +200,22 @@ class CrawlLoop(
       // computes every per-round cache) and doubles as both the next
       // frontier delta and the seen delta — no separate warm-up count, no
       // separate seen_add write job.
-      timed(k, "write.fresh") { store.write("fresh", k + 1, out.fresh) }
-      // ...then the independent output jobs run CONCURRENTLY (they only
-      // read caches + small recomputes); the round barrier is the await
-      val outputs = Seq[(String, () => Unit)](
-        "write.order" -> (() => store.write("order", k, out.order)),
-        "write.results" -> (() => store.write("results", k, out.results)),
-        "write.carry" -> (() => store.write("carry", k + 1, out.carry)),
-        "bloom.update" -> (() => BloomShards.update(spark,
-          out.fresh.select(BloomShards.shardCol(col("urlHash"), cfg.shards).as("shard"), col("urlHash")),
-          Some(store.bloomDir(k)), store.bloomDir(k + 1), cfg)))
+      store.write("fresh", k + 1, out.fresh)
       // cache-hit counts decide the loop condition — the heavy per-shard
       // stats aggregation stays OFF the round barrier entirely
       val freshCountF = Future(out.fresh.count())
       val carryCountF = Future(out.carry.count())
       val statsF = Future(out.stats.collect())
-      val outputF = Future.traverse(outputs) { case (name, job) =>
-        Future(timed(k, name)(job()))
-      }
-      timed(k, "outputs.await") { Await.result(outputF, Duration.Inf) }
+      // ...then the independent output jobs run CONCURRENTLY (they only
+      // read caches + small recomputes); the round barrier is the await
+      val outputs = Seq(
+        Future(store.write("order", k, out.order)),
+        Future(store.write("results", k, out.results)),
+        Future(store.write("carry", k + 1, out.carry)),
+        Future(BloomShards.update(spark,
+          out.fresh.select(BloomShards.shardCol(col("urlHash"), cfg.shards).as("shard"), col("urlHash")),
+          Some(store.bloomDir(k)), store.bloomDir(k + 1), cfg)))
+      Await.result(Future.sequence(outputs), Duration.Inf)
       frontierCount = Await.result(freshCountF, Duration.Inf) +
         Await.result(carryCountF, Duration.Inf)
       if (cfg.compactSeenEvery > 0 && (k + 1) % cfg.compactSeenEvery == 0)
@@ -245,7 +231,7 @@ class CrawlLoop(
       // round that was going to be re-run anyway. The rows live on the
       // driver — one small FS write, no Spark job.
       val wallMs = (System.nanoTime() - t0) / 1000000L
-      val statRows = timed(k, "stats.await") { Await.result(statsF, Duration.Inf) }
+      val statRows = Await.result(statsF, Duration.Inf)
       val lineage = statRows.groupBy(_.getInt(0)).map { case (shard, rows) =>
         val m = rows.map(r => r.getString(1) -> r.getLong(2)).toMap.withDefaultValue(0L)
         Lineage(k, shard, m("admitted"), m("fetched"), m("discovered"),

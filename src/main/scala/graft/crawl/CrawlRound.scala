@@ -134,10 +134,6 @@ object CrawlRound {
         */
       ordBase: Long): RoundOut = {
     import spark.implicits._
-    val noCache = sys.env.contains("GRAFT_NO_PERSIST")
-    def maybePersist(df: DataFrame): DataFrame =
-      if (noCache) df else df.persist(StorageLevel.MEMORY_AND_DISK)
-
     val fc = FrontierCols.map(col)
     val f = frontier.select(fc: _*).persist(StorageLevel.MEMORY_AND_DISK)
     val fCount = frontierCount
@@ -164,9 +160,9 @@ object CrawlRound {
     // round, not once per (admitted, deferred) branch
     val politePersisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val (admitted0, deferred0) = Politeness.partition(allowed, cfg, hostBudgets,
-      persist = df => { val p = maybePersist(df); politePersisted += p; p })
+      persist = df => { val p = df.persist(StorageLevel.MEMORY_AND_DISK); politePersisted += p; p })
     val admitted = admitted0.select(fc: _*).persist(StorageLevel.MEMORY_AND_DISK)
-    val deferred = maybePersist(deferred0.select(fc: _*))
+    val deferred = deferred0.select(fc: _*).persist(StorageLevel.MEMORY_AND_DISK)
 
     // 4. the "fetch": join against the page store on urlHash (fetchJoin).
     // The store is the big streamed side — shuffle-free when bucketed by
@@ -184,15 +180,16 @@ object CrawlRound {
       .withColumn("redir", Extract.redirectTargetCol(col("htmlStr")))
       .withColumn("links", Extract.linksCol(col("htmlStr")))
       .select((fc ++ pageCols :+ col("redir") :+ col("links")): _*)
-      .transform(maybePersist)
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
     val hitKeys = hits.select("url", "urlHash")
     val misses = seenAntiJoin(admitted,
       if (fCount <= cfg.broadcastFrontierMaxRows) broadcast(hitKeys) else hitKeys)
-    val retries = maybePersist(misses
+    val retries = misses
       .filter(col("attempt") + 1 < cfg.maxTries)
       .withColumn("attempt", col("attempt") + 1)
-      .select(fc: _*))
+      .select(fc: _*)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val exhausted = misses.filter(col("attempt") + 1 >= cfg.maxTries)
 
     // 5. crawl order rows for every successful fetch
@@ -231,10 +228,10 @@ object CrawlRound {
     // shuffle over the depth-eligible hits; children inherit them as pord),
     // then Catalyst-planned link extraction (codegen'd built-ins);
     // canonicalize+host is ONE UDF pass (the only UDF on the hot path)
-    val ranked = maybePersist(assignOrdinals(
+    val ranked = assignOrdinals(
       hits.filter(lit(cfg.maxDepth) >= col("depth") + 1)
         .select(col("url"), col("depth"), col("pord"), col("pos"), col("redir"), col("links")),
-      ordBase, math.max(1, cfg.shards)))
+      ordBase, math.max(1, cfg.shards)).persist(StorageLevel.MEMORY_AND_DISK)
 
     // post-canonicalize URL transform: prefix rewrite, then the opt-in
     // tracking-param strip — SAME composition as the oracle's `post`.
@@ -295,13 +292,14 @@ object CrawlRound {
     // exactly once and never cached. Then the EXACT anti-join vs the seen
     // set; bloom shards pre-filter so rows the filter proves unseen skip
     // the anti-join shuffle entirely.
-    val winnowed = maybePersist(candidates
+    val winnowed = candidates
       .groupBy(col("url"))
       .agg(min(struct(col("pord"), col("pos"), col("depth"), col("urlHash"), col("host"), col("attempt"))).as("m"),
         count(lit(1)).as("__dups"))
       .select(col("url"), col("m.urlHash").as("urlHash"), col("m.host").as("host"),
         col("m.depth").as("depth"), col("m.pord").as("pord"), col("m.pos").as("pos"),
-        col("m.attempt").as("attempt"), col("__dups")))
+        col("m.attempt").as("attempt"), col("__dups"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     def antiAllSeen(cand: DataFrame): DataFrame =
       seenParts.foldLeft(cand)((df, s) => seenAntiJoin(df, s))
     val fresh0 = bloomDirPrev match {
@@ -314,7 +312,7 @@ object CrawlRound {
       case _ =>
         antiAllSeen(winnowed.select(fc: _*))
     }
-    val fresh = maybePersist(fresh0.select(fc: _*))
+    val fresh = fresh0.select(fc: _*).persist(StorageLevel.MEMORY_AND_DISK)
 
     // 7. carry-over rows (next frontier = carry ∪ fresh at read time)
     val carry = deferred.select(fc: _*).unionByName(retries)
